@@ -22,6 +22,8 @@ import sys
 import tempfile
 import time
 
+RECORD_FILE = "/tmp/kasper_bench_record.json"
+
 
 def _scratch_dir(prefix: str) -> str:
     """mkdtemp that cleans itself up at interpreter exit.
@@ -320,21 +322,15 @@ def _run(noise_file) -> dict:
     }
     if errors:
         record["errors"] = errors
-    # Mirror the full record to a whole-file sidecar the grading driver
-    # (or a human) can read even if the one-line stdout JSON is ever
-    # tail-truncated again. Repo dir first (committed at round close),
-    # /tmp fallback when the tree is read-only.
-    for mirror in (
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_RECORD.json"),
-        "/tmp/kasper_bench_record.json",
-    ):
-        try:
-            with open(mirror, "w") as fh:
-                json.dump(record, fh, indent=1)
-            record["record_file"] = mirror
-            break
-        except OSError:
-            continue
+    # Mirror the full record to a whole-file sidecar that stays readable
+    # even if the one-line stdout JSON is ever tail-truncated. It lives
+    # outside the repo, so a bench run leaves the working tree clean.
+    record["record_file"] = RECORD_FILE
+    try:
+        with open(RECORD_FILE, "w") as fh:
+            json.dump(record, fh, indent=1)
+    except OSError:
+        record.pop("record_file")
     return record
 
 

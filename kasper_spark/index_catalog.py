@@ -438,7 +438,9 @@ def reclaim_tombstones_partial(
     # partition's __HIVE_DEFAULT_PARTITION__ leaf already fails the int()
     # above, also loudly.)
     loose = glob.glob(os.path.join(idx, primary, "*.parquet"))
-    if loose or not total_per_leaf:
+    if not loose and not total_per_leaf:
+        return 0, []  # empty index: no rows for the tombstones to mask
+    if loose:
         raise ValueError(
             f"reclaim_tombstones_partial: unexpected layout under "
             f"{os.path.join(idx, primary)!r} — "

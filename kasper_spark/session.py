@@ -6,7 +6,10 @@ the *same* logical plans scale to a 1000-executor cluster reading ~100 TB:
 - AQE on (runtime coalescing, skew-join splitting, dynamic broadcast) so the
   shuffle partition count self-tunes with data volume;
 - explicit shuffle-partition default sized for the local test box, overridable
-  via env for cluster runs;
+  via env for cluster runs. It applies to batch queries; a stateful stream
+  query started through ``streaming.pipeline.Pipeline`` uses one state
+  partition per source partition instead, and falls back to this setting
+  only when the source's partition count is unknown;
 - Arrow enabled for the (rare) pandas-UDF escape hatches;
 - parquet filter pushdown / column pruning left at defaults (on) — operators
   are written so Catalyst can use them (checked in tests/test_plans.py).

@@ -27,8 +27,9 @@ files, consumers never see torn lines (writes land under a temp name and
 are renamed in).
 
 Scale shape: one Spark input partition per topic partition (kasper's exact
-parallelism model — SURVEY.md §2.A A7); `latestOffset` is a metadata-only
-scan (line counts, cached per immutable file at real scale); slicing a
+parallelism model — SURVEY.md §2.A A7); `latestOffset` line-counts only the
+files that are new or changed since the previous trigger (counts are
+cached per file on the stream reader) and only stats the rest; slicing a
 micro-batch reads only the [start, end) line range. The connector is the
 bounded-sandbox twin of the Kafka source; the subscribe/checkpoint options
 in streaming/pipeline.py carry the same semantics against a live broker.
@@ -65,6 +66,12 @@ def _partition_dirs(root: str) -> dict[int, str]:
             if name.startswith("p=") and name[2:].isdigit() and os.path.isdir(path):
                 out[int(name[2:])] = path
     return out
+
+
+def partition_count(root: str) -> int:
+    """Number of partitions of the topic at ``root`` (0 if it has none
+    yet or does not exist)."""
+    return len(_partition_dirs(root))
 
 
 def _log_files(pdir: str) -> list[str]:
@@ -187,15 +194,29 @@ class TopicDirStreamReader(DataSourceStreamReader):
             options.get("maxrecordspertrigger", options.get("maxRecordsPerTrigger", 0))
         )
         self._prev: dict | None = None
+        # path -> ((st_size, st_mtime_ns), line count). The stream writer's
+        # marker-less replay can recreate a file under the same name with
+        # other content, so a count is reused only while size and mtime
+        # match too.
+        self._line_counts: dict[str, tuple[tuple[int, int], int]] = {}
 
     def initialOffset(self) -> dict:
         return {str(pid): 0 for pid in sorted(_partition_dirs(self.root))}
 
     def latestOffset(self) -> dict:
-        actual = {
-            str(pid): _count_records(pdir)
-            for pid, pdir in sorted(_partition_dirs(self.root).items())
-        }
+        actual, counts = {}, {}
+        for pid, pdir in sorted(_partition_dirs(self.root).items()):
+            n = 0
+            for f in _log_files(pdir):
+                st = os.stat(f)
+                sig = (st.st_size, st.st_mtime_ns)
+                hit = self._line_counts.get(f)
+                if hit is None or hit[0] != sig:
+                    hit = (sig, _line_count(f))
+                counts[f] = hit
+                n += hit[1]
+            actual[str(pid)] = n
+        self._line_counts = counts  # drops the entries of deleted files
         if not self.cap:
             return actual
         base = self._prev or {p: 0 for p in actual}

@@ -9,7 +9,9 @@ Maps the reference's config/run-loop onto Structured Streaming
 | Config.TopicProcessorName            | PipelineConfig.name (checkpoint dir +   |
 |                                      | kafka group.id prefix)                  |
 | Config.InputTopics                   | PipelineConfig.input_topics (subscribe) |
-| Config.InputPartitions               | automatic (Spark task per partition)    |
+| Config.InputPartitions               | automatic (Spark task per partition;    |
+|                                      | stateful queries get one state          |
+|                                      | partition per source partition)         |
 | Config.BatchSize (default 1000)      | max_offsets_per_trigger                 |
 | Config.BatchWaitDuration (default 5s)| trigger processingTime                  |
 | MessageProcessor.Process             | transform: DataFrame -> DataFrame       |
@@ -28,11 +30,24 @@ Scale notes: one Spark task per Kafka partition; no alignment constraint
 between topics (kasper required equal partition counts —
 /root/reference/README.md:36-39); rate limiting via maxOffsetsPerTrigger
 replaces kasper's unbuffered-channel backpressure.
+
+State sizing: a stateful query started here gets one shuffle/state
+partition per source partition (the largest count over the sources this
+Pipeline built), the analogue of kasper's one processor per partition.
+Each micro-batch loads and commits one state store per state partition,
+so a session default sized for batch jobs (32) would make every trigger
+pay for 32 stores on a 4-partition topic. The count is known for
+topic_dir_source; for kafka_source and file_source (and a topic dir with
+no partitions yet) it is not, and the session's
+spark.sql.shuffle.partitions applies. Spark pins the count in the
+checkpoint's offset log, so a resumed query keeps the count it first ran
+with.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -89,6 +104,30 @@ def _uses_processing_time_timeout(out: DataFrame) -> bool:
     )
 
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str | None):
+    """Set ``key`` on the session for the duration of the block and put
+    back what was there before (unset stays unset). ``value=None`` leaves
+    the session alone. Another thread that uses the same session while the
+    block runs sees the temporary value."""
+    if value is None:
+        yield
+        return
+    conf = spark.conf
+    prev = conf.get(key, None)
+    conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prev)
+
+
 class Pipeline:
     """Build and run one streaming pipeline: source -> transform -> sink.
 
@@ -103,6 +142,18 @@ class Pipeline:
         self.spark = spark
         self.config = config
         self._query = None
+        # partition count of every source built so far; None = unknown
+        self._source_partitions: set[int | None] = set()
+
+    def state_partitions(self) -> int | None:
+        """Shuffle/state partition count for the queries this Pipeline
+        starts: the largest partition count over the sources it built, or
+        None (keep the session's setting) when no source was built or any
+        source's count is unknown."""
+        counts = self._source_partitions
+        if not counts or None in counts:
+            return None
+        return max(counts)
 
     # ---- sources (A1/A8) -------------------------------------------------
 
@@ -111,6 +162,9 @@ class Pipeline:
         (topic, partition) without kasper's equal-partition-count
         constraint (A8)."""
         cfg = self.config
+        # the partition count would need a broker call; the session's
+        # spark.sql.shuffle.partitions is the override
+        self._source_partitions.add(None)
         return (
             self.spark.readStream.format("kafka")
             .option("kafka.bootstrap.servers", ",".join(cfg.brokers))
@@ -126,6 +180,7 @@ class Pipeline:
         """Broker-less source for CI: file stream with the same downstream
         surface (SURVEY.md §7 — every streaming test must run without
         Kafka). One file per 'message batch'."""
+        self._source_partitions.add(None)
         return (
             self.spark.readStream.format(fmt)
             .schema(schema)
@@ -147,9 +202,13 @@ class Pipeline:
         drains bounded runs as ONE batch up to latestOffset, and a cap
         would make that single batch stop short of the end of the log.
         Default off so run_available_now() always consumes everything."""
-        from kasper_spark.sources.topic_dir import register_topic_dir_source
+        from kasper_spark.sources.topic_dir import (
+            partition_count,
+            register_topic_dir_source,
+        )
 
         register_topic_dir_source(self.spark)
+        self._source_partitions.add(partition_count(path) or None)
         reader = self.spark.readStream.format("kasper_topic_dir").option("path", path)
         if rate_limited:
             reader = reader.option(
@@ -205,7 +264,11 @@ class Pipeline:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=f"{cfg.batch_wait_seconds} seconds")
-        self._query = writer.start()
+        # Spark clones the session for the stream inside start(), so the
+        # count reaches this query (and its checkpoint) and nothing else
+        n = self.state_partitions()
+        with _session_conf(self.spark, _SHUFFLE_PARTITIONS, str(n) if n else None):
+            self._query = writer.start()
         return self._query
 
     def kafka_sink(self, out: DataFrame, topic: str, **kwargs):

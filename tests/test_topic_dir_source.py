@@ -640,3 +640,39 @@ def test_batch_writer_marker_fast_path_and_scan_fallback(tmp_path, monkeypatch):
     from kasper_spark.sources.topic_dir import _partition_dirs
 
     assert sorted(_partition_dirs(root)) == [0]
+
+
+def test_latest_offset_counts_only_new_or_changed_files(topic, monkeypatch):
+    """latestOffset line-counts a file once; later triggers reuse the count
+    until a new file lands or a file is rewritten under the same name (the
+    stream writer's marker-less replay does that), and a malformed line
+    still takes its offset slot."""
+    from kasper_spark.sources import topic_dir as td
+
+    reader = TopicDirStreamReader({"path": topic})
+    assert reader.latestOffset() == {"0": 3, "1": 1}
+
+    counted = []
+    real = td._line_count
+    monkeypatch.setattr(td, "_line_count", lambda p: counted.append(p) or real(p))
+    assert reader.latestOffset() == {"0": 3, "1": 1}
+    assert counted == []  # idle trigger: no file is read
+
+    pdir = os.path.join(topic, "p=1")
+    with open(os.path.join(pdir, "001.jsonl"), "w") as fh:
+        fh.write("not json\n")
+        fh.write(json.dumps({"key": "d", "value": "v5", "ts": 5.0}) + "\n")
+    assert reader.latestOffset() == {"0": 3, "1": 3}
+    assert [os.path.basename(p) for p in counted] == ["001.jsonl"]
+    rows = list(reader.read(reader.partitions({"0": 3, "1": 1}, {"0": 3, "1": 3})[0]))
+    assert [(r[3], r[1]) for r in rows] == [(2, "v5")]  # slot 1 stays used
+
+    # same name, same size, other content and mtime: counted again
+    f = os.path.join(pdir, "000.jsonl")
+    st = os.stat(f)
+    with open(f, "w") as fh:
+        fh.write("\n" * st.st_size)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    counted.clear()
+    assert reader.latestOffset() == {"0": 3, "1": st.st_size + 2}
+    assert [os.path.basename(p) for p in counted] == ["000.jsonl"]
