@@ -1454,9 +1454,23 @@ def _md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(par)
     )
-    nh, n = _NUM_HASHES, _SHINGLE_N
+    schema = "doc_id long, " + ", ".join(f"m{i} long" for i in range(_NUM_HASHES))
+    return docs.mapInPandas(_md5_sig_fn(_NUM_HASHES, _SHINGLE_N), schema)
 
-    def sig_fn(pdfs):
+
+# Per-task bound on _md5_sig_fn's shingle memo: each entry holds a
+# 32-lane tuple of ints, about 1.5 KB with its key, so 2^16 entries stay
+# near 96 MiB.
+_MD5_MEMO_CAP = 1 << 16
+
+
+def _md5_sig_fn(nh: int, n: int, memo_cap: int = _MD5_MEMO_CAP):
+    """The mapInPandas body of _md5_sigs: (doc_id, text) frames in,
+    (doc_id, m0..m{nh-1}) frames out. Returned as a closure so that
+    cloudpickle ships it by value (workers need no importable
+    kasper_spark); ``memo`` may be passed in to observe it."""
+
+    def sig_fn(pdfs, memo=None):
         import hashlib
 
         import pandas as pd
@@ -1465,10 +1479,13 @@ def _md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         copies = [h.copy for h in prefs]
         from_bytes = int.from_bytes
         # Boilerplate shingles repeat heavily across documents (~90%
-        # corpus-wide at sf0.1), so memoize shingle -> 32-lane hash tuple
+        # corpus-wide at sf0.1), so memoize shingle -> nh-lane hash tuple
         # per task (round-16 opt, §4.5 amortized state): repeated
-        # shingles hash once, values unchanged by construction.
-        memo: dict[str, tuple] = {}
+        # shingles hash once, values unchanged by construction. The memo
+        # is cleared when it reaches memo_cap, so a high-cardinality
+        # corpus cannot grow it without bound.
+        if memo is None:
+            memo = {}
         for pdf in pdfs:
             out: dict[str, list] = {"doc_id": []}
             for i in range(nh):
@@ -1493,6 +1510,8 @@ def _md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                             h.update(b)
                             vals.append(from_bytes(h.digest()[:8], "big") >> 4)
                         vs = tuple(vals)
+                        if len(memo) >= memo_cap:
+                            memo.clear()
                         memo[s] = vs
                     for i in range(nh):
                         v = vs[i]
@@ -1503,8 +1522,7 @@ def _md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     out[f"m{i}"].append(mins[i])
             yield pd.DataFrame(out)
 
-    schema = "doc_id long, " + ", ".join(f"m{i} long" for i in range(nh))
-    return docs.mapInPandas(sig_fn, schema)
+    return sig_fn
 
 
 def _md5_sigs_hof(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,6 +10,11 @@ the *same* logical plans scale to a 1000-executor cluster reading ~100 TB:
   query started through ``streaming.pipeline.Pipeline`` uses one state
   partition per source partition instead, and falls back to this setting
   only when the source's partition count is unknown;
+- streaming state in RocksDB with changelog checkpointing: each state
+  commit writes only the batch's updates and snapshots are taken by
+  background maintenance, which takes a fixed upload off every
+  micro-batch; Spark resumes a checkpoint written with the setting either
+  on or off;
 - Arrow enabled for the (rare) pandas-UDF escape hatches;
 - parquet filter pushdown / column pruning left at defaults (on) — operators
   are written so Catalyst can use them (checked in tests/test_plans.py).
@@ -50,6 +55,9 @@ _DEFAULTS = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
+    # a state commit writes a changelog of the batch's updates; snapshots
+    # move to background maintenance instead of every commit uploading one
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     # If a deployment opts into reliable lineage cuts (sc.setCheckpointDir +
     # kasper_spark/lineage.py), out-of-scope checkpoints must be garbage-
     # collected like cached blocks are — Spark's default (false) would leak

@@ -33,12 +33,36 @@ cached per file on the stream reader) and only stats the rest; slicing a
 micro-batch reads only the [start, end) line range. The connector is the
 bounded-sandbox twin of the Kafka source; the subscribe/checkpoint options
 in streaming/pipeline.py carry the same semantics against a live broker.
+
+Per-batch fixed costs. At kasper's ~1 s latency target a micro-batch moves
+a few hundred rows per task, so what every task pays regardless of its
+rows decides latency (Drizzle, SOSP 2017). Two such costs are removed on
+this path:
+
+- PySpark's worker calls ``importlib.invalidate_caches()`` before every
+  task so that newly shipped files become importable. On Python 3.11 that
+  re-parses the central directory of every zip archive on the worker's
+  path (``pyspark.zip``, the ``spark-core`` jar: 140-390 ms per task),
+  although none of them changed. ``install_zip_invalidation_guard`` runs
+  first in each of the connector's worker-side entry points and makes a
+  zipimporter re-read its archive only when the archive's size or mtime
+  changed; directory caches are untouched. Python >= 3.12 does this
+  lazily already and is left alone.
+- Without changelog checkpointing each RocksDB state commit uploads a
+  full snapshot; the session turns it on (``session.py``).
+
+Planning (``partitions``) hands each slice the (path, size, mtime, first
+offset, line count) of the files that overlap its range, so a task opens
+only those files and counts no lines; a slice without that list (one
+replayed from the offset log) or whose files changed since planning falls
+back to counting.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import uuid
 from datetime import datetime, timezone
@@ -54,6 +78,57 @@ from pyspark.sql.datasource import (
 )
 
 SCHEMA = "key string, value string, partition int, offset long, ts timestamp"
+
+
+def install_zip_invalidation_guard() -> bool:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_size, st_mtime_ns)`` changed since this process last read it.
+
+    An unchanged archive gets back the directory already held in
+    ``zipimport._zip_directory_cache``; a new or rewritten one is re-read,
+    which is what PySpark's per-task ``importlib.invalidate_caches()`` is
+    for. The first call after the install still reads each archive once,
+    because what was cached before the install has no recorded signature.
+
+    Once per process: the guard marks its wrapper, so a second install
+    (every task calls this; the module is pickled by value, so module
+    globals do not survive between tasks) changes nothing. Returns whether
+    this call installed it. No-op on Python >= 3.12, whose zipimporter
+    already defers the re-read."""
+    import sys
+
+    if sys.version_info >= (3, 12):
+        return False
+    import zipimport
+
+    cls = zipimport.zipimporter
+    orig = cls.invalidate_caches
+    if getattr(orig, "_kasper_zip_guard", False):
+        return False
+    read_sigs: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self):
+        archive = self.archive
+        try:
+            st = os.stat(archive)
+            sig = (st.st_size, st.st_mtime_ns)
+        except OSError:
+            sig = None
+        files = zipimport._zip_directory_cache.get(archive)
+        if sig is not None and files is not None and read_sigs.get(archive) == sig:
+            self._files = files
+            return
+        # stat before the read: a rewrite racing the read leaves the old
+        # signature recorded, so the next call reads the archive again
+        read_sigs.pop(archive, None)
+        orig(self)
+        if sig is not None and archive in zipimport._zip_directory_cache:
+            read_sigs[archive] = sig
+
+    invalidate_caches._kasper_zip_guard = True
+    invalidate_caches.__wrapped__ = orig
+    cls.invalidate_caches = invalidate_caches
+    return True
 
 
 def _partition_dirs(root: str) -> dict[int, str]:
@@ -89,8 +164,9 @@ def _line_count(path: str) -> int:
     return n
 
 
-def _count_records(pdir: str) -> int:
-    return sum(_line_count(f) for f in _log_files(pdir))
+def _file_sig(path: str) -> tuple[int, int]:
+    st = os.stat(path)
+    return (st.st_size, st.st_mtime_ns)
 
 
 def _decode_ts(raw):
@@ -100,61 +176,97 @@ def _decode_ts(raw):
     return datetime.fromtimestamp(raw, tz=timezone.utc).replace(tzinfo=None)
 
 
-def _read_range(root: str, pid: int, start: int, end: int):
+def _slice_files(counted, start: int, end: int) -> list[tuple]:
+    """``(path, size, mtime_ns, first_offset, lines)`` of the files in
+    ``counted`` (``(path, (size, mtime_ns), lines)`` in log order) that
+    overlap offsets ``[start, end)``."""
+    out, first = [], 0
+    for path, (size, mtime_ns), n in counted:
+        if first >= end:
+            break
+        if first + n > start:
+            out.append((path, size, mtime_ns, first, n))
+        first += n
+    return out
+
+
+def _count_files(pdir: str, end: float = math.inf) -> list[tuple]:
+    """``(path, (size, mtime_ns), lines)`` of the log files of ``pdir`` in
+    order, line-counted until ``end`` offsets are covered."""
+    counted, total = [], 0
+    for f in _log_files(pdir):
+        if total >= end:
+            break
+        sig = _file_sig(f)
+        n = _line_count(f)
+        counted.append((f, sig, n))
+        total += n
+    return counted
+
+
+def _planned_files_valid(files) -> bool:
+    try:
+        return all(_file_sig(f[0]) == (f[1], f[2]) for f in files)
+    except OSError:
+        return False
+
+
+def _read_range(root: str, pid: int, start: int, end: int, files=None):
     """Yield messages [start, end) of partition ``pid`` as schema tuples.
 
-    Files wholly below ``start`` are skipped with a raw newline count (no
-    JSON decode) — cheap line-skipping for long-lived capped streams. At
-    real scale the per-(immutable-)file counts would be cached in a
-    sidecar index; the access pattern is already file-skipping here."""
+    ``files`` is the slice's plan from ``partitions()``; only those files
+    are opened. Without a plan, or when a planned file's size or mtime no
+    longer matches, the files up to ``end`` are line-counted here."""
     pdir = os.path.join(root, f"p={pid}")
     if not os.path.isdir(pdir) or end <= start:
         return
-    idx = 0
-    for f in _log_files(pdir):
-        if idx >= end:
-            return
-        if idx < start:
-            n = _line_count(f)
-            if idx + n <= start:
-                idx += n
-                continue
-        with open(f, encoding="utf-8") as fh:
-            for line in fh:
-                if idx >= end:
-                    return
-                if idx >= start:
-                    # Partition files are connector-private, but a single
-                    # malformed or ts-less line (truncated write, foreign
-                    # tooling) must not wedge the stream forever — the same
-                    # offset range is retried on every trigger, so raising
-                    # here is permanent. Skip the line but keep its offset
-                    # slot: idx counts raw lines, matching _line_count, so
-                    # offsets stay aligned for the rest of the log.
-                    # OverflowError/OSError: datetime.fromtimestamp raises
-                    # these (not ValueError) for out-of-range numeric ts —
-                    # without them a single absurd-ts line would re-raise on
-                    # every retrigger and wedge the stream permanently.
-                    try:
-                        m = json.loads(line)
-                        rec = (m.get("key"), m["value"], pid, idx, _decode_ts(m["ts"]))
-                    except (ValueError, KeyError, TypeError, OverflowError, OSError) as e:
-                        import sys
+    if files is None or not _planned_files_valid(files):
+        files = _slice_files(_count_files(pdir, end), start, end)
+    for path, _size, _mtime_ns, first, n in files:
+        yield from _read_lines(path, pid, first, max(start, first), min(end, first + n))
 
-                        print(
-                            f"topic_dir: skipping malformed line at "
-                            f"p={pid} offset {idx} in {f}: {e!r}",
-                            file=sys.stderr,
-                        )
-                        rec = None
-                    if rec is not None:
-                        yield rec
-                idx += 1
+
+def _read_lines(path: str, pid: int, idx: int, start: int, end: int):
+    """Messages [start, end) of one log file whose first line is offset
+    ``idx``."""
+    with open(path, encoding="utf-8") as fh:
+        for line in fh:
+            if idx >= end:
+                return
+            if idx >= start:
+                # Partition files are connector-private, but a single
+                # malformed or ts-less line (truncated write, foreign
+                # tooling) must not wedge the stream forever — the same
+                # offset range is retried on every trigger, so raising
+                # here is permanent. Skip the line but keep its offset
+                # slot: idx counts raw lines, matching _line_count, so
+                # offsets stay aligned for the rest of the log.
+                # OverflowError/OSError: datetime.fromtimestamp raises
+                # these (not ValueError) for out-of-range numeric ts —
+                # without them a single absurd-ts line would re-raise on
+                # every retrigger and wedge the stream permanently.
+                try:
+                    m = json.loads(line)
+                    rec = (m.get("key"), m["value"], pid, idx, _decode_ts(m["ts"]))
+                except (ValueError, KeyError, TypeError, OverflowError, OSError) as e:
+                    import sys
+
+                    print(
+                        f"topic_dir: skipping malformed line at "
+                        f"p={pid} offset {idx} in {path}: {e!r}",
+                        file=sys.stderr,
+                    )
+                    rec = None
+                if rec is not None:
+                    yield rec
+            idx += 1
 
 
 class _RangePartition(InputPartition):
-    def __init__(self, root: str, pid: int, start: int, end: int):
+    def __init__(self, root: str, pid: int, start: int, end: int, files=None):
         self.root, self.pid, self.start, self.end = root, pid, start, end
+        # (path, size, mtime_ns, first_offset, lines) per overlapping file
+        self.files = files
 
 
 class TopicDirBatchReader(DataSourceReader):
@@ -162,15 +274,19 @@ class TopicDirBatchReader(DataSourceReader):
         self.root = options["path"]
 
     def partitions(self):
-        return [
-            _RangePartition(self.root, pid, 0, _count_records(pdir))
-            for pid, pdir in sorted(_partition_dirs(self.root).items())
-        ]
+        parts = []
+        for pid, pdir in sorted(_partition_dirs(self.root).items()):
+            counted = _count_files(pdir)
+            end = sum(n for _f, _sig, n in counted)
+            parts.append(
+                _RangePartition(self.root, pid, 0, end, _slice_files(counted, 0, end))
+            )
+        return parts
 
     def read(self, partition: _RangePartition):
-        yield from _read_range(
-            partition.root, partition.pid, partition.start, partition.end
-        )
+        install_zip_invalidation_guard()
+        p = partition
+        yield from _read_range(p.root, p.pid, p.start, p.end, p.files)
 
 
 class TopicDirStreamReader(DataSourceStreamReader):
@@ -194,29 +310,28 @@ class TopicDirStreamReader(DataSourceStreamReader):
             options.get("maxrecordspertrigger", options.get("maxRecordsPerTrigger", 0))
         )
         self._prev: dict | None = None
-        # path -> ((st_size, st_mtime_ns), line count). The stream writer's
-        # marker-less replay can recreate a file under the same name with
-        # other content, so a count is reused only while size and mtime
-        # match too.
-        self._line_counts: dict[str, tuple[tuple[int, int], int]] = {}
+        # pid -> [(path, (st_size, st_mtime_ns), lines)] in log order, as
+        # of the last latestOffset; partitions() plans slices from it. The
+        # stream writer's marker-less replay can recreate a file under the
+        # same name with other content, so the next latestOffset reuses a
+        # count only while size and mtime match too.
+        self._counted: dict[int, list[tuple]] = {}
 
     def initialOffset(self) -> dict:
         return {str(pid): 0 for pid in sorted(_partition_dirs(self.root))}
 
     def latestOffset(self) -> dict:
-        actual, counts = {}, {}
+        known = {f: (sig, n) for fs in self._counted.values() for f, sig, n in fs}
+        actual, counted = {}, {}
         for pid, pdir in sorted(_partition_dirs(self.root).items()):
-            n = 0
+            files = counted[pid] = []
             for f in _log_files(pdir):
-                st = os.stat(f)
-                sig = (st.st_size, st.st_mtime_ns)
-                hit = self._line_counts.get(f)
-                if hit is None or hit[0] != sig:
-                    hit = (sig, _line_count(f))
-                counts[f] = hit
-                n += hit[1]
-            actual[str(pid)] = n
-        self._line_counts = counts  # drops the entries of deleted files
+                sig = _file_sig(f)
+                hit = known.get(f)
+                n = hit[1] if hit is not None and hit[0] == sig else _line_count(f)
+                files.append((f, sig, n))
+            actual[str(pid)] = sum(n for _f, _sig, n in files)
+        self._counted = counted  # drops the entries of deleted files
         if not self.cap:
             return actual
         base = self._prev or {p: 0 for p in actual}
@@ -232,16 +347,23 @@ class TopicDirStreamReader(DataSourceStreamReader):
             for p, s in start.items():
                 merged[p] = max(merged.get(p, 0), s)
             self._prev = merged
-        return [
-            _RangePartition(self.root, int(pid), start.get(pid, 0), stop)
-            for pid, stop in sorted(end.items())
-            if stop > start.get(pid, 0)
-        ]
+        parts = []
+        for pid, stop in sorted(end.items()):
+            first = start.get(pid, 0)
+            if stop <= first:
+                continue
+            counted = self._counted.get(int(pid), [])
+            if sum(n for _f, _sig, n in counted) >= stop:
+                files = _slice_files(counted, first, stop)
+            else:
+                files = None  # e.g. a batch replayed from the offset log
+            parts.append(_RangePartition(self.root, int(pid), first, stop, files))
+        return parts
 
     def read(self, partition: _RangePartition):
-        yield from _read_range(
-            partition.root, partition.pid, partition.start, partition.end
-        )
+        install_zip_invalidation_guard()
+        p = partition
+        yield from _read_range(p.root, p.pid, p.start, p.end, p.files)
 
     def commit(self, end: dict) -> None:
         # Nothing to do: like the Kafka source, progress lives in Spark's
@@ -337,6 +459,7 @@ class TopicDirWriter(DataSourceWriter):
         )
 
     def write(self, iterator):
+        install_zip_invalidation_guard()
         return _WroteFiles(
             _stage_buckets(
                 self.root,
@@ -510,6 +633,7 @@ class TopicDirStreamWriter(DataSourceStreamWriter):
 
     # executors ---------------------------------------------------------
     def write(self, iterator):
+        install_zip_invalidation_guard()
         return _WroteFiles(
             _stage_buckets(
                 self.root,

@@ -116,3 +116,46 @@ def test_resumed_checkpoint_keeps_its_pinned_count(spark, tmp_path):
     assert counts == {"a": 3, "b": 2, "c": 2, "d": 2}
     assert spark.conf.get(KEY) == "8"
 
+
+
+CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
+def _changelog_files(ck: str) -> list[str]:
+    state = os.path.join(ck, "state", "0")
+    return [
+        f
+        for p in sorted(os.listdir(state))
+        if os.path.isdir(os.path.join(state, p))
+        for f in os.listdir(os.path.join(state, p))
+        if f.endswith(".changelog")
+    ]
+
+
+def test_checkpoint_resumes_across_changelog_setting(spark, tmp_path):
+    """The session turns on RocksDB changelog checkpointing. A checkpoint
+    started with it off resumes with it on and then off again, and the
+    running counts continue exactly: no reset and no double count."""
+    from kasper_spark.session import _DEFAULTS
+
+    assert _DEFAULTS[CHANGELOG] == "true"
+    assert spark.conf.get(CHANGELOG) == "true"
+    root = _topic(str(tmp_path / "t"), 2)
+    ck = str(tmp_path / "ck" / "changelog")
+    counts, sink = _collector()
+    try:
+        for step, setting in enumerate(["false", None, "false"]):
+            if step:
+                _seed(root, step % 2, ["a c", "c"], f"{step:03d}.jsonl")
+            spark.conf.set(CHANGELOG, setting or _DEFAULTS[CHANGELOG])
+            pipe = _pipeline(spark, tmp_path, "changelog")
+            _drain(pipe, running_word_count(pipe.topic_dir_source(root)), sink)
+            if step == 0:
+                assert counts == {"a": 4, "b": 2, "p0": 1, "p1": 1}
+                assert _changelog_files(ck) == []
+            if step == 1:
+                assert counts["a"] == 5 and counts["c"] == 2
+                assert _changelog_files(ck) != []
+        assert counts == {"a": 6, "b": 2, "c": 4, "p0": 1, "p1": 1}
+    finally:
+        spark.conf.set(CHANGELOG, _DEFAULTS[CHANGELOG])

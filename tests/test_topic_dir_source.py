@@ -36,6 +36,16 @@ def _seed(root: str, pid: int, messages: list[tuple[str, str, float]], fname: st
             fh.write(json.dumps({"key": key, "value": value, "ts": ts}) + "\n")
 
 
+@pytest.fixture(autouse=True)
+def _restore_zipimporter(monkeypatch):
+    """Reader and writer entry points install the zip invalidation guard;
+    tests that call them in this process put CPython's method back."""
+    import zipimport
+
+    cls = zipimport.zipimporter
+    monkeypatch.setattr(cls, "invalidate_caches", cls.invalidate_caches)
+
+
 @pytest.fixture()
 def topic(spark):
     register_topic_dir_source(spark)
@@ -676,3 +686,83 @@ def test_latest_offset_counts_only_new_or_changed_files(topic, monkeypatch):
     counted.clear()
     assert reader.latestOffset() == {"0": 3, "1": st.st_size + 2}
     assert [os.path.basename(p) for p in counted] == ["000.jsonl"]
+
+
+def _long_partition(root: str, n_files: int) -> None:
+    for i in range(n_files):
+        _seed(root, 0, [(f"k{i}", f"v{i}", float(i))], f"{i:04d}.jsonl")
+
+
+def test_read_opens_only_planned_files(tmp_path, monkeypatch):
+    """partitions() hands each slice the counts latestOffset already has, so
+    reading the newest 10 lines of a 200-file partition counts no line and
+    opens only the 10 files that hold them."""
+    from kasper_spark.sources import topic_dir as td
+
+    root = str(tmp_path / "t")
+    _long_partition(root, 200)
+    reader = TopicDirStreamReader({"path": root})
+    assert reader.latestOffset() == {"0": 200}
+
+    counted, opened = [], []
+    real_count, real_lines = td._line_count, td._read_lines
+    monkeypatch.setattr(td, "_line_count", lambda p: counted.append(p) or real_count(p))
+    monkeypatch.setattr(
+        td, "_read_lines", lambda p, *a: opened.append(p) or real_lines(p, *a)
+    )
+    (part,) = reader.partitions({"0": 190}, {"0": 200})
+    rows = list(reader.read(part))
+    assert counted == []
+    assert [r[3] for r in rows] == list(range(190, 200))
+    assert [r[1] for r in rows] == [f"v{i}" for i in range(190, 200)]
+    assert [os.path.basename(p) for p in opened] == [
+        f"{i:04d}.jsonl" for i in range(190, 200)
+    ]
+
+    # a slice planned by a reader that never ran latestOffset (a batch
+    # replayed from the offset log) counts lines and reads the same rows
+    (replayed,) = TopicDirStreamReader({"path": root}).partitions(
+        {"0": 190}, {"0": 200}
+    )
+    assert replayed.files is None
+    assert list(reader.read(replayed)) == rows
+    assert len(counted) == 200
+
+    # the batch reader plans its slices the same way
+    batch = td.TopicDirBatchReader({"path": root})
+    (whole,) = batch.partitions()
+    counted.clear()
+    assert len(list(batch.read(whole))) == 200
+    assert counted == []
+
+
+def test_rewrite_after_planning_reads_new_rows(tmp_path):
+    """A file rewritten under the same name between planning and read (the
+    stream writer's marker-less replay does that) no longer matches the
+    slice's plan, so the task re-counts and returns the rewritten rows."""
+    root = str(tmp_path / "t")
+    _long_partition(root, 3)
+    reader = TopicDirStreamReader({"path": root})
+    assert reader.latestOffset() == {"0": 3}
+    (part,) = reader.partitions({"0": 1}, {"0": 3})
+    assert len(part.files) == 2
+
+    _seed(root, 0, [("k1", "r1", 9.0), ("k1", "r2", 9.0)], "0001.jsonl")
+    assert [(r[3], r[1]) for r in reader.read(part)] == [(1, "r1"), (2, "r2")]
+
+
+def test_planned_read_keeps_malformed_line_slot(tmp_path):
+    root = str(tmp_path / "t")
+    _long_partition(root, 2)
+    with open(os.path.join(root, "p=0", "0000.jsonl"), "a") as fh:
+        fh.write("not json\n")
+    _seed(root, 0, [("k", "last", 7.0)], "0002.jsonl")
+    reader = TopicDirStreamReader({"path": root})
+    assert reader.latestOffset() == {"0": 4}
+    (part,) = reader.partitions({"0": 0}, {"0": 4})
+    assert [f[3:] for f in part.files] == [(0, 2), (2, 1), (3, 1)]
+    assert [(r[3], r[1]) for r in reader.read(part)] == [
+        (0, "v0"),
+        (2, "v1"),
+        (3, "last"),
+    ]
