@@ -1440,8 +1440,8 @@ def _md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-15 opt: one map-only Python pass per partition instead of the
     32-wide md5/conv aggregate (the JVM form evaluated 32 codegen'd
-    md5+hex-conv chains per exploded shingle row). Bit-identity, pinned
-    against _md5_sigs_hof in tests/test_round15_opt.py: tokens =
+    md5+hex-conv chains per exploded shingle row). Bit-identity to the
+    oracle's sigs CTE (certified through the _md5_lsh_pairs keys): tokens =
     split-on-space minus empties (str.split(" ") keeps consecutive-space
     empties exactly like F.split's regex); shingles = 3-gram joins,
     per-doc distinct, docs under 3 tokens absent; each m_i =
@@ -1523,30 +1523,6 @@ def _md5_sig_fn(nh: int, n: int, memo_cap: int = _MD5_MEMO_CAP):
             yield pd.DataFrame(out)
 
     return sig_fn
-
-
-def _md5_sigs_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-round-15 JVM-aggregate form of _md5_sigs, kept as the
-    equivalence reference for tests/test_round15_opt.py."""
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    toks = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    raw = toks.select("doc_id", _shingles_raw(F.col("toks")).alias("raw"))
-    # non-attribute explode child: see minhash_lsh_candidates on the
-    # InferFiltersFromGenerate plan trap
-    ex = raw.select("doc_id", F.explode(F.array_distinct("raw")).alias("s"))
-    return ex.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.conv(
-                    F.substring(F.md5(F.concat(F.lit(f"{i}|"), F.col("s"))), 1, 15),
-                    16,
-                    10,
-                ).cast("long")
-            ).alias(f"m{i}")
-            for i in range(_NUM_HASHES)
-        ]
-    )
 
 
 def _pack_sig(sigs: DataFrame) -> DataFrame:
@@ -2390,35 +2366,12 @@ def entity_resolution_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation (no all-pairs), the closure as ONE per-block union-find
     pass (round-16 opt: edges cannot span blocks, so the ~15-job
     large/small-star loop collapses to one shuffle + one Arrow task per
-    block — see _cc_within_blocks; the loop form stays in-tree as the
-    pinned reference), and a size window over entities (entity-sized,
-    not corpus-sized)."""
+    block — see _cc_within_blocks), and a size window over entities
+    (entity-sized, not corpus-sized)."""
     from pyspark.sql.window import Window
 
     pairs = levenshtein_block_pairs(spark, sf_dir, with_block=True)
     cc = _cc_within_blocks(pairs, ["source", "lang", "w1"])
-    w = Window.partitionBy("cluster_id")
-    return cc.select(
-        "doc_id",
-        F.col("cluster_id").alias("entity_id"),
-        (F.col("doc_id") == F.col("cluster_id")).cast("bigint").alias("is_canonical"),
-        F.count(F.lit(1)).over(w).cast("bigint").alias("entity_size"),
-    )
-
-
-def _entity_resolution_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-round-16 form of entity_resolution_pipeline (closure via
-    the large/small-star loop), kept as the equivalence reference for
-    tests/test_round16_opt.py."""
-    from pyspark.sql.window import Window
-
-    # ordered=False: the closure consumes an unordered edge SET — the
-    # public query's presentation sort would cost a global range shuffle
-    # here for nothing (round-15 opt; the driver hash is order-insensitive)
-    pairs = levenshtein_block_pairs(spark, sf_dir, ordered=False).select(
-        "doc_a", "doc_b"
-    )
-    cc = connected_components(pairs)
     w = Window.partitionBy("cluster_id")
     return cc.select(
         "doc_id",

@@ -445,11 +445,29 @@ def _bm25_graded_scored_sql() -> str:
     )"""
 
 
-def _graded_base_tf(spark: SparkSession, sf_dir: str):
-    """(base, tf_nz) — the shared scan/tokenize projection and the sparse
-    per-(doc, term) nonzero counts over the MRR vocabulary. ONE definition
-    so the literal-inlined plan and the join-form reference (and the
-    driver-side df resolution) provably run the identical tf subtree."""
+def _graded_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, doc_id, score_dec DECIMAL(30,12), min_tf), score_dec > 0
+    — the Spark twin of _bm25_graded_scored_sql's ``scored`` CTE, shared
+    by the whole ranking-eval family (MRR / nDCG / P-R@k).
+
+    Round-16 opt (guide §1.2 "pre-resolved literals" / r15-verdict floor
+    ticket): the corpus stats (2 longs), per-term df (<=13 rows) and the
+    per-query present-term counts are DRIVER-BOUNDED by construction, so
+    they are resolved in one small job up front and inlined as literal
+    maps. The oracle's cross join + three broadcast joins become one
+    linear explode -> filter -> agg -> agg chain: fewer exchanges, far
+    fewer codegen spans, and about half the warm time of the
+    broadcast-join plan at sf0.01 and sf0.1.
+
+    Bit-identity argument: idf and avgdl are plain IEEE-754 double
+    expressions over exact longs (< 2^53); Python and the JVM evaluate
+    the SAME operation tree ((n_docs - df) + 0.5, etc.) with the same
+    rounding, so inlining the Python-computed double literal is
+    bit-equal to the JVM-computed column it replaces. The per-row
+    tf_part * idf product and the DECIMAL(30,12) cast stay JVM-side,
+    unchanged. The qt fan-out becomes an explode over a literal
+    term -> [query_id] map (element_at misses yield NULL, and
+    explode(NULL) emits nothing — exactly the inner join's drop)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = _toks(F.col("text"))
     base = docs.select(
@@ -471,40 +489,10 @@ def _graded_base_tf(spark: SparkSession, sf_dir: str):
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    return base, tf_nz
-
-
-def _graded_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, doc_id, score_dec DECIMAL(30,12), min_tf), score_dec > 0
-    — the Spark twin of _bm25_graded_scored_sql's ``scored`` CTE, shared
-    by the whole ranking-eval family (MRR / nDCG / P-R@k).
-
-    Round-16 opt (guide §1.2 "pre-resolved literals" / r15-verdict floor
-    ticket): the corpus stats (2 longs), per-term df (<=13 rows) and the
-    per-query present-term counts are DRIVER-BOUNDED by construction, so
-    they are resolved in two small jobs up front and inlined as literal
-    maps. That collapses the cross join + three broadcast joins of the
-    join-form plan (kept below as _graded_scored_joinform, pinned
-    row-identical) into one linear explode -> filter -> agg -> agg chain:
-    fewer exchanges, far fewer codegen spans — which is where the cold
-    per-key wall of this family actually went (first-execution codegen,
-    measured 2.31 s -> see OPTIMIZATION_r16.md).
-
-    Bit-identity argument: idf and avgdl are plain IEEE-754 double
-    expressions over exact longs (< 2^53); Python and the JVM evaluate
-    the SAME operation tree ((n_docs - df) + 0.5, etc.) with the same
-    rounding, so inlining the Python-computed double literal is
-    bit-equal to the JVM-computed column it replaces. The per-row
-    tf_part * idf product and the DECIMAL(30,12) cast stay JVM-side,
-    unchanged. The qt fan-out becomes an explode over a literal
-    term -> [query_id] map (element_at misses yield NULL, and
-    explode(NULL) emits nothing — exactly the inner join's drop)."""
-    base, tf_nz = _graded_base_tf(spark, sf_dir)
     # ONE resolution job: the corpus-stats aggregate and the per-term df
     # aggregate are unioned into a single action, so their subtrees run
-    # inside one DAG (overlapping stages, one scheduling barrier) exactly
-    # like the join form's broadcast sides did — the values are the same
-    # aggregates, dispatched on the null term marker.
+    # inside one DAG (overlapping stages, one scheduling barrier); the
+    # rows are dispatched on the null term marker.
     combo = (
         tf_nz.groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
@@ -527,14 +515,18 @@ def _graded_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     )
-    stats_row = next(r for r in combo if r["term"] is None)
-    n_docs, total_tokens = stats_row["n_docs"], stats_row["total_tokens"]
     df_by_term = {r["term"]: r["df"] for r in combo if r["term"] is not None}
     if not df_by_term:
-        # no vocabulary term occurs anywhere (empty/degenerate corpus):
-        # literal maps would be empty — serve the reference form, whose
-        # inner joins produce the same (empty) result.
-        return _graded_scored_joinform(spark, sf_dir)
+        # no vocabulary term occurs anywhere (no-match or empty corpus):
+        # no doc scores > 0, and avgdl may be undefined (0 docs).
+        return tf_nz.select(
+            F.lit(0).cast("long").alias("query_id"),
+            "doc_id",
+            F.lit(0).cast("decimal(30,12)").alias("score_dec"),
+            F.lit(0).cast("long").alias("min_tf"),
+        ).limit(0)
+    stats_row = next(r for r in combo if r["term"] is None)
+    n_docs, total_tokens = stats_row["n_docs"], stats_row["total_tokens"]
     # n_terms counts the query terms PRESENT in the corpus (df > 0), not
     # len(ts): the dense oracle's scored CTE inner-joins df USING (term),
     # so a corpus-wide-absent term never enters MIN(f.tf) — counting it
@@ -610,81 +602,6 @@ def _graded_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _graded_scored_joinform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r15-certified broadcast-join form of _graded_scored, kept
-    in-tree as the executable equivalence reference (pinned row-identical
-    by tests/test_round16_opt.py) and as the degenerate-corpus fallback."""
-    base, tf_nz = _graded_base_tf(spark, sf_dir)
-    stats = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-    )
-    df_t = tf_nz.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df")
-    )
-    qt = spark.createDataFrame(
-        [(qid, t) for qid, ts in _MRR_QUERIES for t in ts],
-        "query_id long, term string",
-    )
-    n_terms = qt.join(df_t, "term").groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_terms")
-    )
-    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")
-    idf = (
-        F.col("n_docs").cast("double") - F.col("df").cast("double") + F.lit(0.5)
-    ) / (F.col("df").cast("double") + F.lit(0.5))
-    tf_part = (F.col("tf").cast("double") * F.lit(_BM25_K1 + 1.0)) / (
-        F.col("tf").cast("double")
-        + F.lit(_BM25_K1)
-        * (F.lit(1.0 - _BM25_B) + (F.lit(_BM25_B) * F.col("dl").cast("double")) / avgdl)
-    )
-    contrib = (idf * tf_part).cast("decimal(30,12)")
-    return (
-        tf_nz.join(F.broadcast(df_t), "term")
-        .join(F.broadcast(qt), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(contrib).cast("decimal(30,12)").alias("score_dec"),
-            F.min("tf").cast("long").alias("min_tf_present"),
-            F.count(F.lit(1)).alias("n_present"),
-        )
-        .join(F.broadcast(n_terms), "query_id")
-        .select(
-            "query_id",
-            "doc_id",
-            "score_dec",
-            F.when(
-                F.col("n_present") == F.col("n_terms"), F.col("min_tf_present")
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("min_tf"),
-        )
-        .filter(F.col("score_dec") > 0)
-    )
-
-
-def _graded_scored_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scored ranking as SERVED from the fingerprint-keyed parquet
-    cache (functions/result_cache.py) — built lazily once per corpus
-    version by the in-flight chain above. DECIMAL/BIGINT columns
-    round-trip parquet exactly, so consumers' oracle hashes are
-    unchanged (equality vs the in-flight chain asserted in
-    tests/test_round13_ops.py). mrr_relevance_contract stays on the
-    in-flight chain as the build-path certification; nDCG and P-R@k
-    serve from here (r12 verdict ticket #6)."""
-    from kasper_spark.functions.result_cache import cached_result
-
-    return cached_result(
-        spark,
-        sf_dir,
-        "bm25-graded-scored",
-        "documents",
-        lambda: _graded_scored(spark, sf_dir),
-    )
-
-
 @register_query(
     "mrr_relevance_contract",
     oracle=_bm25_graded_scored_sql()
@@ -731,9 +648,8 @@ def mrr_relevance_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the per-query ranking window is PARTITIONED by query — each
     query's retrieved set, not the corpus, bounds a partition. The
     first-relevant rank is min(rk) over relevant rows, not a full sort
-    consumed by a driver. This query IS the family's in-flight
-    certification of the scored chain; nDCG and P-R@k serve the same
-    ranking from the fingerprint-keyed cache (_graded_scored_cached)."""
+    consumed by a driver. nDCG and P-R@k rank the same _graded_scored
+    chain."""
     from pyspark.sql.window import Window
 
     scored = _graded_scored(spark, sf_dir)
@@ -1707,13 +1623,10 @@ def ndcg_relevance_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to MRR — scan-stage tf over the 13-term union
     vocabulary, broadcast df/stats/query-terms/discounts, per-query
-    ranking windows bounded by the retrieved set. SERVES the scored
-    ranking from the fingerprint-keyed cache (r12 verdict ticket #6);
-    the chain itself stays certified in-flight by
-    mrr_relevance_contract."""
+    ranking windows bounded by the retrieved set."""
     from pyspark.sql.window import Window
 
-    scored = _graded_scored_cached(spark, sf_dir)
+    scored = _graded_scored(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.desc("score_dec"), F.asc("doc_id"))
     top = (
         scored.select(
@@ -1912,12 +1825,10 @@ def precision_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the shared scored/ranked shape (scan-stage tf, broadcast
     df/stats, per-query windows); the metric adds only two bounded
-    aggregates over the rank-filtered rows. SERVES the scored ranking
-    from the fingerprint-keyed cache (r12 verdict ticket #6); the chain
-    itself stays certified in-flight by mrr_relevance_contract."""
+    aggregates over the rank-filtered rows."""
     from pyspark.sql.window import Window
 
-    scored = _graded_scored_cached(spark, sf_dir)
+    scored = _graded_scored(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.desc("score_dec"), F.asc("doc_id"))
     ranked = cut_lineage(
         scored.select(

@@ -101,27 +101,6 @@ _BM25_CORE_SQL = f"""
 """
 
 
-def _bm25_base_tf(spark: SparkSession, sf_dir: str):
-    """(base, tf) — the shared scan/tokenize projection and the dense
-    per-(doc, term) counts over the 3 literal seed terms (computed inside
-    the scan stage, no token explode). ONE definition shared by the
-    literal-inlined plan, the join-form reference and the driver-side df
-    resolution."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
-    base = docs.select(
-        "doc_id", toks.alias("t"), F.size(toks).cast("long").alias("dl")
-    )
-    terms = F.explode(F.array(*[F.lit(t) for t in _BM25_TERMS])).alias("term")
-    tf = base.select("doc_id", "dl", "t", terms).select(
-        "doc_id",
-        "dl",
-        "term",
-        F.size(F.expr("filter(t, w -> w = term)")).cast("long").alias("tf"),
-    )
-    return base, tf
-
-
 def _bm25_tf_part(avgdl_lit) -> Column:
     """The per-row BM25 tf saturation term with avgdl supplied as a
     pre-resolved double (literal or column) — byte-identical expression
@@ -138,71 +117,26 @@ def _bm25_tf_part(avgdl_lit) -> Column:
 
 def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared BM25 plan: (doc_id, score_dec, rank) over docs matching
-    at least one query term — the Spark twin of _BM25_CORE_SQL.
-
-    Round-16 opt (guide §1.2 pre-resolved literals; same treatment as
-    evaluation._graded_scored, see the bit-identity argument there): the
-    corpus stats and the 3-term df table are driver-bounded, so they are
-    resolved in two small jobs and inlined as double literals / a 3-entry
-    literal map — the broadcast df join and the stats cross join leave
-    the plan, which becomes scan -> tf -> project -> one exchange ->
-    rank window. The join form is kept below (pinned row-identical)."""
+    at least one query term — the Spark twin of _BM25_CORE_SQL. The corpus
+    stats and the per-term df are two tiny aggregates broadcast back into
+    the scan's tf rows, so one plan serves every corpus, including one
+    that matches no query term or has no rows (both rank nothing)."""
     from pyspark.sql.window import Window
 
-    base, tf = _bm25_base_tf(spark, sf_dir)
-    # ONE resolution job: the dense tf grid carries every doc exactly once
-    # per term, so each term group sees all docs — count(*) IS n_docs,
-    # sum(dl) IS total_tokens, and the conditional count IS the df the
-    # join form aggregated separately. One corpus pass where the join
-    # form's plan ran two subtree scans (stats + df side) beside the main
-    # one.
-    rows = (
-        tf.groupBy("term")
-        .agg(
-            F.count(F.when(F.col("tf") > 0, F.lit(1))).cast("long").alias("df"),
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("dl").cast("long").alias("total_tokens"),
-        )
-        .collect()
+    docs = load_table(spark, sf_dir, "documents")
+    toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    base = docs.select(
+        "doc_id", toks.alias("t"), F.size(toks).cast("long").alias("dl")
     )
-    df_by_term = {r["term"]: r["df"] for r in rows if r["df"] > 0}
-    if not df_by_term:
-        return _bm25_ranked_joinform(spark, sf_dir)
-    n_docs = rows[0]["n_docs"]
-    total_tokens = rows[0]["total_tokens"]
-    avgdl = float(total_tokens) / float(n_docs)
-    idf_map = F.create_map(
-        *[
-            x
-            for t, df in df_by_term.items()
-            for x in (
-                F.lit(t),
-                F.lit((float(n_docs) - float(df) + 0.5) / (float(df) + 0.5)),
-            )
-        ]
-    )
-    contrib = tf.filter(F.col("tf") > 0).select(
+    # dense per-(doc, term) counts over the 3 literal seed terms, computed
+    # inside the scan stage (no token explode)
+    terms = F.explode(F.array(*[F.lit(t) for t in _BM25_TERMS])).alias("term")
+    tf = base.select("doc_id", "dl", "t", terms).select(
         "doc_id",
-        (F.element_at(idf_map, F.col("term")) * _bm25_tf_part(F.lit(avgdl)))
-        .cast("decimal(30,12)")
-        .alias("part"),
+        "dl",
+        "term",
+        F.size(F.expr("filter(t, w -> w = term)")).cast("long").alias("tf"),
     )
-    bm25 = contrib.groupBy("doc_id").agg(
-        F.sum("part").cast("decimal(30,12)").alias("score_dec")
-    )
-    w = Window.orderBy(F.desc("score_dec"), F.asc("doc_id"))
-    return bm25.select(
-        "doc_id", "score_dec", F.row_number().over(w).alias("rank")
-    )
-
-
-def _bm25_ranked_joinform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The broadcast-join form of _bm25_ranked, kept as the executable
-    equivalence reference (pinned row-identical in
-    tests/test_round16_opt.py) and the degenerate-corpus fallback."""
-    from pyspark.sql.window import Window
-
-    base, tf = _bm25_base_tf(spark, sf_dir)
     stats = base.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("total_tokens"),
@@ -229,24 +163,6 @@ def _bm25_ranked_joinform(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.desc("score_dec"), F.asc("doc_id"))
     return bm25.select(
         "doc_id", "score_dec", F.row_number().over(w).alias("rank")
-    )
-
-
-def _bm25_ranked_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_bm25_ranked as SERVED from the fingerprint-keyed parquet cache
-    (functions/result_cache.py) — built lazily once per corpus version.
-    DECIMAL/BIGINT/INT columns round-trip parquet exactly, so consumers'
-    oracle hashes are unchanged. bm25_keyword_topk stays on the in-flight
-    chain as this family's build-path certification; RRF, hybrid search,
-    and PRF expansion serve from here (r12 verdict ticket #6)."""
-    from kasper_spark.functions.result_cache import cached_result
-
-    return cached_result(
-        spark,
-        sf_dir,
-        "bm25-keyword-ranked",
-        "documents",
-        lambda: _bm25_ranked(spark, sf_dir),
     )
 
 
@@ -340,7 +256,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     kw = (
-        _bm25_ranked_cached(spark, sf_dir)
+        _bm25_ranked(spark, sf_dir)
         .filter(F.col("rank") <= _RRF_DEPTH)
         .select("doc_id", F.col("rank").alias("kw_rank"))
     )
@@ -454,7 +370,7 @@ def hybrid_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kasper_spark.operators.similarity import dot_exact, norm_exact
 
     kw = (
-        _bm25_ranked_cached(spark, sf_dir)
+        _bm25_ranked(spark, sf_dir)
         .filter(F.col("rank") <= _RRF_DEPTH)
         .select("doc_id", F.col("rank").alias("kw_rank"))
     )
@@ -621,7 +537,8 @@ def _bm25_score_over_terms(docs, terms_df):
 
 def _bm25_score_over_literal_terms(docs, terms: tuple[str, ...]):
     """The literal-terms twin of _bm25_score_over_terms (round-16
-    pre-resolved-literals opt, same equivalence argument as _bm25_ranked):
+    pre-resolved-literals opt, bit-identity argument in
+    evaluation._graded_scored):
     the bounded term set arrives as Python strings, so the broadcast
     semi-join becomes an isin filter, and df/stats resolve driver-side
     into literals — one explode -> filter -> agg -> agg -> window chain.
@@ -701,7 +618,7 @@ def _prf_expansion(spark: SparkSession, sf_dir: str):
     """(expansion DataFrame, docs) — the selected feedback terms with
     their stats, shared by both PRF registry entries."""
     docs = load_table(spark, sf_dir, "documents")
-    round1 = _bm25_ranked_cached(spark, sf_dir)
+    round1 = _bm25_ranked(spark, sf_dir)
     fb = round1.filter(F.col("rank") <= _PRF_FB_DOCS).select("doc_id")
     toks = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     # materialized once (round-15 opt): both the feedback-tf and the

@@ -749,15 +749,15 @@ def _seedk_rank_scan(
 ) -> DataFrame:
     """BIT-IDENTICAL numpy twin of the seed-K (first _IVF_K vectors)
     cosine ranking the fixed-K IVF family shares (ann_ivf_topk's
-    ``ranked`` / _residual_core's): one map-only pass ranking each row
+    ``ranked`` / _residuals'): one map-only pass ranking each row
     against the 32 broadcast seed centroids — dot_double's left fold
     reproduced by dimension-order accumulation, norms by the certified
     scaled-decimal dot, (ccos DESC, cid ASC) ties by stable argsort over
     cid-ascending columns (round-15 opt; the interpreted HOF join paid
     N x K x d per query). ``emit_res`` additionally yields the rn=1
     residual v - centroid(v) (the same float64 subtraction zip_with
-    performed). Equivalence to the HOF form is pinned in
-    tests/test_round15_opt.py."""
+    performed). Certified through the DuckDB oracles of the fixed-K IVF
+    family (ann_ivf_topk, ann_ivf_pq_topk, ann_ivf_pq_residual)."""
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2952,9 +2952,10 @@ def _pq_parts(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
 # lookups per (candidate, probing query) — exact, order-independent — and
 # the final /1e12 (plus the one additive centroid-term float add for the
 # residual family) reproduces the decimal->double cast bit-for-bit, the
-# same argument _np_dot_exact_scaled certifies. Row-for-row equality to
-# the join-chain forms is pinned in tests/test_round16_opt.py; the chains
-# themselves stay in-tree (ann_ivf_pq_trained still rides them).
+# same argument _np_dot_exact_scaled certifies. The serving keys are
+# certified against their DuckDB join-chain oracles
+# (tests/test_oracle_parity.py); ann_ivf_pq_trained still rides the
+# plan-native chain (_pq_parts).
 
 
 def _pq_cb_state(rows) -> dict:
@@ -2980,7 +2981,7 @@ def _pq_cb_state(rows) -> dict:
 def _np_adc_lut(Q, cb_rows, subdim: int = _PQ_SUBDIM):
     """L[qpos, sub_j, code_r] int64: the 1e12-scaled exact-decimal
     partial dots of every query subspace slice with every codeword — the
-    driver twin of _pq_lut/_pqres_lut's pdist column (same certified
+    driver twin of _pq_lut's pdist column (same certified
     scaled-decimal quantization, so L[q, j, r] IS pdist's unscaled
     decimal, exactly)."""
     import numpy as np
@@ -3273,7 +3274,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow pass over the corpus (round-16 opt, §4.2: the encode join, the
     LUT broadcast join and the 8-code groupBy exchange all collapsed into
     _np_adc_scan; scores bit-identical by the scaled-decimal argument,
-    pinned in tests/test_round16_opt.py), so nothing shuffles at corpus
+    certified against the oracle), so nothing shuffles at corpus
     scale except the per-query top-shortlist, whose input the scan's
     per-batch partial top-k already bounds. At 100 TB you compose with
     IVF (IVF-PQ: probe centroid lists first, ADC only inside probed
@@ -3289,77 +3290,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, qids, L, cb_rows=cb_rows, shortlist=_PQ_SHORTLIST
     )
     return _pq_shortlist_rerank(spark, sf_dir, adc)
-
-
-def _ann_pq_topk_joinchain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-round-16 join-chain form of ann_pq_topk, kept as the
-    equivalence reference for tests/test_round16_opt.py."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    encoded, lut = _pq_parts(emb)
-    adc = (
-        encoded.join(F.broadcast(lut), ["sub_j", "code_r"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(
-            F.sum("pdist")
-            .cast("decimal(38,12)")
-            .cast("double")
-            .alias("adc_score")
-        )
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    short = (
-        adc.select(
-            "query_id",
-            "neighbor_id",
-            "adc_score",
-            F.row_number().over(w_short).alias("srn"),
-        )
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .drop("srn")
-    )
-    e = emb.select(
-        "vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm")
-    )
-    q = e.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    rer = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_score",
-            (dot_exact(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rer.select(
-            "query_id",
-            "neighbor_id",
-            "adc_score",
-            "cosine",
-            F.row_number().over(w_rank).alias("rank"),
-        )
-        .filter(F.col("rank") <= _TOP_K)
-    )
 
 
 @register_query(
@@ -3463,7 +3393,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same kernel (_seedk_probe_driver), and the whole former join pyramid
     (assign/probe windows, candidate join, code join, LUT broadcast
     join, 8-code groupBy) disappears from the plan — values
-    bit-identical, pinned in tests/test_round16_opt.py; nothing
+    bit-identical, certified against the oracle; nothing
     corpus-sized shuffles except the shortlist window over the scan's
     per-batch top-k."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3482,101 +3412,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         shortlist=_PQ_SHORTLIST,
     )
     return _pq_shortlist_rerank(spark, sf_dir, adc)
-
-
-def _ann_ivf_pq_topk_joinchain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-round-16 join-chain form of ann_ivf_pq_topk, kept as the
-    equivalence reference for tests/test_round16_opt.py."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm"))
-    cent = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_to_cent = dot_double(F.col("embedding"), F.col("cemb")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    rn_w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
-    ranked = (
-        e.join(F.broadcast(cent))
-        .select("vec_id", "embedding", "nrm", "cid", cos_to_cent.alias("ccos"))
-        .select("vec_id", "cid", F.row_number().over(rn_w).alias("rn"))
-    )
-    assign = ranked.filter(F.col("rn") == 1).select("vec_id", "cid")
-    probe = (
-        ranked.filter((F.col("vec_id") < _N_QUERY) & (F.col("rn") <= _IVF_NPROBE))
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    cand = (
-        probe.join(assign, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    encoded, lut = _pq_parts(emb)
-    adc = (
-        cand.join(
-            encoded.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
-        )
-        .join(F.broadcast(lut), ["query_id", "sub_j", "code_r"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.sum("pdist")
-            .cast("decimal(38,12)")
-            .cast("double")
-            .alias("adc_score")
-        )
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    short = (
-        adc.select(
-            "query_id",
-            "neighbor_id",
-            "adc_score",
-            F.row_number().over(w_short).alias("srn"),
-        )
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .drop("srn")
-    )
-    q = e.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    rer = (
-        short.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "adc_score",
-            (dot_exact(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias(
-                "cosine"
-            ),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rer.select(
-            "query_id",
-            "neighbor_id",
-            "adc_score",
-            "cosine",
-            F.row_number().over(w_rank).alias("rank"),
-        )
-        .filter(F.col("rank") <= _TOP_K)
-    )
 
 
 # The ADC scoring tail shared VERBATIM by ann_ivf_pq_trained and
@@ -3886,7 +3721,7 @@ def _search_pq_persisted_index(
     # built from the on-disk codebook (one pyarrow read), and the whole
     # candidate join + LUT join + 8-code groupBy collapses into ONE
     # map-only pass over the statically pruned code partitions
-    # (_np_adc_scan; bit-identical, pinned in tests/test_round16_opt.py).
+    # (_np_adc_scan; bit-identical, certified against the oracle).
     cent = _os.path.join(idx, "centroids")
     qids, Q, _qn = _collect_query_state(spark, sf_dir)
     probe_map = _assign_probe_driver(qids, Q, cent, nprobe)
@@ -4583,13 +4418,9 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual codebook, assignment, residual subtraction, encode, ADC
     code-sum AND the additive centroid term run fused in ONE map-only
     Arrow pass (_np_adc_scan residual mode) — probe pairs and the
-    |Q| x nprobe dqc terms are driver state (the same kernels, pinned in
-    tests/test_round16_opt.py); the former five-way join chain is gone
-    from the plan."""
-    res = _seedk_rank_scan(spark, sf_dir, 1, emit_res=True).select(
-        "vec_id", "cid", "rvec"
-    )
-    cb_rows = _pqres_codebook(res).collect()
+    |Q| x nprobe dqc terms are driver state (the same kernels, certified
+    against the oracle's five-way join chain)."""
+    cb_rows = _pqres_codebook(_residuals(spark, sf_dir)).collect()
     emb = load_table(spark, sf_dir, "embeddings")
     qids, Q, qn = _collect_query_state(spark, sf_dir)
     seed_state = _seedk_state(spark, sf_dir)
@@ -4610,29 +4441,10 @@ def ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_shortlist_rerank(spark, sf_dir, adc)
 
 
-def _ann_ivf_pq_residual_joinchain(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The pre-round-16 join-chain form of ann_ivf_pq_residual, kept as
-    the equivalence reference for tests/test_round16_opt.py."""
-    core = _residual_core(spark, sf_dir)
-    codebook = _pqres_codebook(core["res"])
-    encoded = _pqres_encode_np(core["res"], codebook)  # numpy twin (r15 opt)
-    lut = _pqres_lut(core["e"], codebook)
-    dqc = _pqres_dqc(core["e"], core["cent"], core["probe"])
-    cand = (
-        core["probe"].join(core["assign"], "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "cid", F.col("vec_id").alias("neighbor_id"))
-    )
-    adc = _pqres_adc(cand, encoded, lut, dqc)
-    return _pq_shortlist_rerank(spark, sf_dir, adc)
-
-
 def _np_dqc(Q, seed_state, probe_map) -> dict:
     """{(query position, cid): double}: the additive exact-decimal
-    <q, centroid> ADC term per probed list — the driver twin of
-    _pqres_dqc's dqc column (same certified scaled-decimal dot, same
+    <q, centroid> ADC term per probed list — the driver twin of the
+    oracle's dqc CTE (same certified scaled-decimal dot, same
     correctly-rounded /1e12 = the DECIMAL -> DOUBLE cast), |Q| x nprobe
     entries, bounded by construction."""
     import numpy as np
@@ -4649,69 +4461,14 @@ def _np_dqc(Q, seed_state, probe_map) -> dict:
     return out
 
 
-def _residual_core(spark: SparkSession, sf_dir: str) -> dict:
-    """{e, cent, assign, probe, res}: the fixed-K cosine coarse quantizer
-    and per-vector residuals shared by ann_ivf_pq_residual, the persisted
-    residual-index build, and its serving query. Round-15 opt: the
-    assignment/probe ranking and the residual subtraction run in the
-    numpy seed-K scan (_seedk_rank_scan, values bit-identical to the
-    HOF broadcast ranking — pinned against _residual_core_hof in
-    tests/test_round15_opt.py); e/cent stay plan-native for the
-    LUT/centroid-term consumers."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm"))
-    cent = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("nrm").alias("cnrm"),
-    )
-    res = _seedk_rank_scan(spark, sf_dir, 1, emit_res=True).select(
+def _residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cid, rvec): each vector's fixed-K coarse list and its
+    residual v - centroid(v), from the numpy seed-K scan
+    (_seedk_rank_scan) — shared by ann_ivf_pq_residual and the persisted
+    residual-index build."""
+    return _seedk_rank_scan(spark, sf_dir, 1, emit_res=True).select(
         "vec_id", "cid", "rvec"
     )
-    assign = res.select("vec_id", "cid")
-    probe = _seedk_rank_scan(
-        spark, sf_dir, _IVF_NPROBE, queries_only=True
-    ).select(F.col("vec_id").alias("query_id"), "cid")
-    return {"e": e, "cent": cent, "assign": assign, "probe": probe, "res": res}
-
-
-def _residual_core_hof(spark: SparkSession, sf_dir: str) -> dict:
-    """The pre-round-15 interpreted-HOF form of _residual_core, kept as
-    the equivalence reference for tests/test_round15_opt.py."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm"))
-    cent = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("nrm").alias("cnrm"),
-    )
-    cos_to_cent = dot_double(F.col("embedding"), F.col("cemb")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    rn_w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
-    ranked = (
-        e.join(F.broadcast(cent))
-        .select("vec_id", "embedding", "nrm", "cid", cos_to_cent.alias("ccos"))
-        .select("vec_id", "cid", F.row_number().over(rn_w).alias("rn"))
-    )
-    assign = ranked.filter(F.col("rn") == 1).select("vec_id", "cid")
-    probe = ranked.filter(
-        (F.col("vec_id") < _N_QUERY) & (F.col("rn") <= _IVF_NPROBE)
-    ).select(F.col("vec_id").alias("query_id"), "cid")
-
-    rvec = F.zip_with(
-        F.col("embedding"),
-        F.col("cemb"),
-        lambda x, c: x.cast("double") - c.cast("double"),
-    )
-    res = (
-        assign.join(e, "vec_id")
-        .join(F.broadcast(cent.select("cid", "cemb")), "cid")
-        .select("vec_id", "cid", rvec.alias("rvec"))
-    )
-    return {"e": e, "cent": cent, "assign": assign, "probe": probe, "res": res}
 
 
 def _pqres_slices_of(col_name: str):
@@ -4779,59 +4536,6 @@ def _pqres_encode_np(
     return _encode_np_impl(res, codebook, "rvec", packed)
 
 
-def _pqres_lut(e: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(query_id, sub_j, code_r, pdist): per-query exact-decimal ADC
-    table — query slices are RAW vectors (the inner-product residual
-    decomposition keeps the LUT query-side, see ann_ivf_pq_residual)."""
-    qslices = (
-        e.filter(F.col("vec_id") < _N_QUERY)
-        .select(
-            "vec_id",
-            F.posexplode(_pqres_slices_of("embedding")).alias("sub_j", "svec"),
-        )
-    )
-    return qslices.join(F.broadcast(codebook), "sub_j").select(
-        F.col("vec_id").alias("query_id"),
-        "sub_j",
-        "code_r",
-        _dot_exact_dec(F.col("svec"), F.col("cvec")).alias("pdist"),
-    )
-
-
-def _pqres_dqc(e: DataFrame, cent: DataFrame, probe: DataFrame) -> DataFrame:
-    """(query_id, cid, dqc): the additive exact-decimal <q, centroid>
-    term per probed list — |Q| x nprobe rows."""
-    return (
-        probe.join(
-            e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")),
-            "query_id",
-        )
-        .join(F.broadcast(cent.select("cid", "cemb")), "cid")
-        .select(
-            "query_id", "cid", _dot_exact_dec(F.col("qe"), F.col("cemb")).alias("dqc")
-        )
-    )
-
-
-def _pqres_adc(
-    cand: DataFrame, encoded: DataFrame, lut: DataFrame, dqc: DataFrame
-) -> DataFrame:
-    """(query_id, neighbor_id, adc_score): residual code-sum + centroid
-    term. ``cand`` carries (query_id, cid, neighbor_id)."""
-    return (
-        cand.join(encoded.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-        .join(F.broadcast(lut), ["query_id", "sub_j", "code_r"])
-        .join(F.broadcast(dqc), ["query_id", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            (
-                F.sum("pdist").cast("decimal(38,12)").cast("double")
-                + F.any_value(F.col("dqc")).cast("double")
-            ).alias("adc_score")
-        )
-    )
-
-
 # --- Persisted RESIDUAL IVF-PQ index (round 13): the last unpersisted
 # ANN family. Same fingerprint key as the coarse/PQ index; artifacts are
 # the residual codebook and one-row-per-vector residual codes partitioned
@@ -4846,17 +4550,17 @@ def _build_pqres_index(spark: SparkSession, sf_dir: str) -> str:
     idx = _ivf_index_dir(sf_dir)
     _cat.marker_remove(idx, _PQRES_MARKER)
     _os.makedirs(idx, exist_ok=True)
-    core = _residual_core(spark, sf_dir)
+    res = _residuals(spark, sf_dir)
     cb_path = _os.path.join(idx, "pqres_codebook")
-    _pqres_codebook(core["res"]).coalesce(1).write.mode("overwrite").parquet(
+    _pqres_codebook(res).coalesce(1).write.mode("overwrite").parquet(
         cb_path
     )
     # encode against the codebook as READ BACK from disk (the build
     # discipline shared with _build_ivf_pq_index)
     codebook = spark.read.parquet(cb_path)
     (
-        _pqres_encode_np(core["res"], codebook, packed=True)
-        .join(core["assign"].select("vec_id", "cid"), "vec_id")
+        _pqres_encode_np(res, codebook, packed=True)
+        .join(res.select("vec_id", "cid"), "vec_id")
         .repartition(F.col("cid"))
         .write.mode("overwrite")
         .partitionBy("cid")

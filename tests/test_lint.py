@@ -136,3 +136,120 @@ def test_no_pinned_persist_in_engine_source():
                     "localCheckpoint() or pair with unpersist()"
                 )
     assert not problems, "\n".join(problems)
+
+
+# ---- Pinned-only code gate ----------------------------------------------
+#
+# A module-level private function in kasper_spark/ must be reachable from
+# a live root: a registered query, a public name, module-level code, or
+# the tools/, examples/, perfbench/, bench.py and __spark_entry__.py
+# entry points. One that only tests reach is a second copy of a
+# computation kept for comparison; where the live form has a DuckDB
+# oracle, tests/test_oracle_parity.py certifies it instead.
+#
+# Reachability is by name over the AST (any Name, attribute, imported
+# name or identifier-shaped string constant counts as a reference), so
+# it over-approximates what is live and never flags a real caller.
+
+LIVE_ROOT_DIRS = ["tools", "examples", "perfbench"]
+LIVE_ROOT_FILES = ["bench.py", "__spark_entry__.py"]
+
+# Kept test-only references: each is the only value reference its tests
+# have.
+TEST_ONLY_ALLOWED = {
+    "_ann_lsh_topk_hof": "ann_lsh_topk has no DuckDB oracle; its only value reference",
+    "_pq_encode": "JVM encoder that _pq_encode_np is checked against, code for code",
+    "_pqres_encode": "JVM encoder for _pqres_encode_np and the persisted residual codes",
+    "_train_centroids_np": "long-form centroids for the pyarrow write round trip and _kmeans_core",
+    "_ivf_trained_candidates_np": "candidate half of the composed form the fused trained-IVF serve equals",
+}
+
+
+def _identifiers(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if n.value.isidentifier():
+                out.add(n.value)
+    return out
+
+
+def _module_stmts(body: list[ast.stmt]):
+    """Module-level statements, looking through if/try blocks."""
+    for s in body:
+        if isinstance(s, (ast.If, ast.Try)):
+            for branch in (
+                [s.body, s.orelse, getattr(s, "finalbody", [])]
+                + [h.body for h in getattr(s, "handlers", [])]
+            ):
+                yield from _module_stmts(branch)
+        else:
+            yield s
+
+
+def _files_identifiers(paths) -> set[str]:
+    out: set[str] = set()
+    for p in paths:
+        out |= _identifiers(ast.parse(p.read_text(), filename=str(p)))
+    return out
+
+
+def pinned_only_functions(repo: Path = REPO) -> dict[str, str]:
+    """{name: "path:line"} of module-level private functions in
+    kasper_spark/ that no live root reaches (tests-only or dead)."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    live: set[str] = set()
+    for path in sorted((repo / "kasper_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for s in _module_stmts(tree.body):
+            if not isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                live |= _identifiers(s)
+                continue
+            where = f"{path.relative_to(repo)}:{s.lineno}"
+            defs.setdefault(s.name, []).append((where, s))
+            registered = False
+            for d in s.decorator_list:
+                live |= _identifiers(d)
+                f = d.func if isinstance(d, ast.Call) else d
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+                registered |= name.startswith("register")
+            if registered or not s.name.startswith("_"):
+                live.add(s.name)
+    for d in LIVE_ROOT_DIRS:
+        live |= _files_identifiers(sorted((repo / d).rglob("*.py")))
+    live |= _files_identifiers(repo / f for f in LIVE_ROOT_FILES if (repo / f).exists())
+
+    reached: set[str] = set()
+    work = [n for n in live if n in defs]
+    while work:
+        n = work.pop()
+        if n in reached:
+            continue
+        reached.add(n)
+        for _, node in defs[n]:
+            work.extend(i for i in _identifiers(node) if i in defs and i not in reached)
+    return {
+        name: where
+        for name, nodes in defs.items()
+        if name.startswith("_") and not name.startswith("__") and name not in reached
+        for where, node in nodes
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def test_no_pinned_only_private_functions():
+    found = pinned_only_functions()
+    unexpected = {n: w for n, w in found.items() if n not in TEST_ONLY_ALLOWED}
+    assert not unexpected, (
+        "private functions no live root reaches (delete them, or certify the "
+        "live form in tests/test_oracle_parity.py):\n"
+        + "\n".join(f"{w}: {n}" for n, w in sorted(unexpected.items()))
+    )
+    stale = sorted(set(TEST_ONLY_ALLOWED) - set(found))
+    assert not stale, f"allowlisted names that are now live or gone: {stale}"

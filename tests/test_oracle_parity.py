@@ -1,5 +1,9 @@
 """The t2 gate, run locally: every oracle-backed query must match DuckDB
-bit-exactly at sf0.001 (fast loop; the driver re-checks at sf0.01).
+bit-exactly at sf0.001 (fast loop; the driver re-checks at sf0.01). The
+keys whose rewritten plans have no second in-tree form to compare with
+(the fused ANN scans, per-block ER, the md5 signature pass, the BM25
+chains) are also checked at sf0.01, and the BM25 chains on degenerate
+corpora.
 
 Rows-only queries (no oracle) are smoke-checked for determinism: two runs
 produce identical sorted results."""
@@ -13,13 +17,22 @@ from pyspark.sql import functions as F
 
 from kasper_spark.catalog import TABLES
 from kasper_spark.registry import QUERIES, ORACLES, load_all_operators
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_utils import register_duck_views, run_both
 
 load_all_operators()
 
 ORACLE_NAMES = sorted(ORACLES)
 ROWS_ONLY_NAMES = sorted(set(QUERIES) - set(ORACLES))
+SF_ORACLE_NAMES = [
+    "ann_pq_topk",
+    "ann_ivf_pq_topk",
+    "ann_ivf_pq_residual",
+    "entity_resolution_pipeline",
+    "lsh_candidates_md5",
+    "bm25_keyword_topk",
+    "mrr_relevance_contract",
+]
 
 
 @pytest.fixture(scope="module")
@@ -32,6 +45,24 @@ def duck_views(duck):
 def test_oracle_parity(spark, duck_views, name):
     problems = run_both(
         spark, duck_views, QUERIES[name], ORACLES[name], SF_SMOKE, name
+    )
+    assert not problems, "\n".join(problems)
+
+
+@pytest.fixture(scope="module")
+def duck_oracle_views():
+    import duckdb
+
+    con = duckdb.connect()
+    register_duck_views(con, SF_ORACLE)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", SF_ORACLE_NAMES)
+def test_oracle_parity_sf001(spark, duck_oracle_views, name):
+    problems = run_both(
+        spark, duck_oracle_views, QUERIES[name], ORACLES[name], SF_ORACLE, name
     )
     assert not problems, "\n".join(problems)
 
@@ -72,6 +103,22 @@ def test_dtype_class_gate_catches_int_float_drift():
     assert not compare_frames(f.copy(), f.copy(), "t3")
 
 
+def _sf_with_documents(tmp_path, docs) -> str:
+    """A scale-factor dir holding SF_SMOKE's tables, except that
+    ``documents`` is replaced by ``docs``."""
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in TABLES:
+        if t != "documents":
+            src = os.path.join(SF_SMOKE, f"{t}.parquet")
+            os.symlink(src, os.path.join(sf, f"{t}.parquet"))
+    out = str(tmp_path / "documents_new")
+    docs.coalesce(1).write.mode("overwrite").parquet(out)
+    part = [f for f in os.listdir(out) if f.endswith(".parquet")][0]
+    os.symlink(os.path.join(out, part), os.path.join(sf, "documents.parquet"))
+    return sf
+
+
 def test_simhash_md5_parity_with_empty_documents(spark, duck, tmp_path):
     """ADVICE r05 latent bug: the simhash_md5_certified oracle drops
     token-less docs (UNNEST of an empty list yields no rows) while Spark
@@ -80,12 +127,6 @@ def test_simhash_md5_parity_with_empty_documents(spark, duck, tmp_path):
     DOES contain empty/whitespace-only documents."""
     import duckdb
 
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    for t in TABLES:
-        src = os.path.join(SF_SMOKE, f"{t}.parquet")
-        os.symlink(src, os.path.join(sf, f"{t}.parquet"))
-    # rebuild documents with two token-less docs appended
     docs = spark.read.parquet(os.path.join(SF_SMOKE, "documents.parquet"))
     extra = spark.createDataFrame(
         [(990001, "", ), (990002, "   ",)], ["doc_id", "text"]
@@ -97,11 +138,7 @@ def test_simhash_md5_parity_with_empty_documents(spark, duck, tmp_path):
         ).select(docs.columns),
         allowMissingColumns=False,
     )
-    out = os.path.join(sf, "documents_aug")
-    aug.coalesce(1).write.mode("overwrite").parquet(out)
-    os.remove(os.path.join(sf, "documents.parquet"))
-    part = [f for f in os.listdir(out) if f.endswith(".parquet")][0]
-    os.symlink(os.path.join(out, part), os.path.join(sf, "documents.parquet"))
+    sf = _sf_with_documents(tmp_path, aug)
 
     con = duckdb.connect()
     register_duck_views(con, sf)
@@ -110,3 +147,35 @@ def test_simhash_md5_parity_with_empty_documents(spark, duck, tmp_path):
         ORACLES["simhash_md5_certified"], sf, "simhash_md5_empty_docs",
     )
     assert not problems, "\n".join(problems)
+
+
+@pytest.mark.parametrize("corpus", ["no_query_term", "empty"])
+def test_bm25_chains_parity_on_degenerate_corpus(spark, tmp_path, corpus):
+    """The BM25 keyword and graded-eval chains each have one plan; it
+    must match DuckDB when no document contains any BM25 or MRR query
+    term, and when the documents table has no rows."""
+    import duckdb
+
+    docs = spark.read.parquet(os.path.join(SF_SMOKE, "documents.parquet"))
+    if corpus == "empty":
+        docs = docs.limit(0)
+    else:
+        docs = docs.withColumn(
+            "text",
+            F.concat_ws(
+                " ",
+                F.lit("lorem"),
+                (F.col("doc_id") % 7).cast("string"),
+                F.lit("ipsum dolor"),
+            ),
+        )
+    sf = _sf_with_documents(tmp_path, docs)
+
+    con = duckdb.connect()
+    register_duck_views(con, sf)
+    for name in ("bm25_keyword_topk", "rrf_fusion_topk", "mrr_relevance_contract"):
+        problems = run_both(
+            spark, con, QUERIES[name], ORACLES[name], sf, f"{name}_{corpus}"
+        )
+        assert not problems, "\n".join(problems)
+    con.close()

@@ -388,8 +388,8 @@ def test_pqres_persisted_codes_match_inflight_and_prune(spark):
         spark.read.parquet(S._os.path.join(idx, "pqres_codes"))
         .select("vec_id", F.posexplode("codes").alias("sub_j", "code_r"))
     )
-    core = S._residual_core(spark, SF_SMOKE)
-    fresh = S._pqres_encode(core["res"], S._pqres_codebook(core["res"]))
+    res = S._residuals(spark, SF_SMOKE)
+    fresh = S._pqres_encode(res, S._pqres_codebook(res))
     a = sorted(map(tuple, persisted.collect()))
     b = sorted(map(tuple, fresh.select("vec_id", "sub_j", "code_r").collect()))
     assert a == b and a
@@ -597,39 +597,6 @@ def test_index_compaction_preserves_serving(spark):
         map(tuple, S._search_persisted_index(spark, SF_SMOKE, idx).collect())
     )
     assert after_serve == before_serve
-
-
-def test_result_cache_equals_inflight_chains(spark):
-    """The fingerprint-keyed ranking caches must be bit-equal to their
-    in-flight chains (decimal/bigint parquet round-trip), and a second
-    read must not rebuild (marker mtime stable)."""
-    import os
-
-    from kasper_spark.functions.result_cache import _MARKER, cache_dir
-    from kasper_spark.operators.evaluation import (
-        _graded_scored,
-        _graded_scored_cached,
-    )
-    from kasper_spark.operators.retrieval import (
-        _bm25_ranked,
-        _bm25_ranked_cached,
-    )
-
-    for fresh_fn, cached_fn, name in [
-        (_graded_scored, _graded_scored_cached, "bm25-graded-scored"),
-        (_bm25_ranked, _bm25_ranked_cached, "bm25-keyword-ranked"),
-    ]:
-        a = sorted(map(tuple, fresh_fn(spark, SF_SMOKE).collect()))
-        b = sorted(map(tuple, cached_fn(spark, SF_SMOKE).collect()))
-        assert a == b, f"cache {name} diverged from its in-flight chain"
-        # fresh_fn lives in the same module as cached_fn's internal build
-        # lambda, so it carries the same code token (the key is per-FILE)
-        marker = os.path.join(
-            cache_dir(SF_SMOKE, name, "documents", build=fresh_fn), _MARKER
-        )
-        mt = os.path.getmtime(marker)
-        cached_fn(spark, SF_SMOKE).collect()
-        assert os.path.getmtime(marker) == mt, f"cache {name} was rebuilt"
 
 
 def test_mutual_knn_plan_has_no_pair_shuffle(spark, monkeypatch):

@@ -147,28 +147,6 @@ def test_ann_lsh_topk_matches_hof_form(spark):
     assert got == want
 
 
-def test_seedk_rank_scan_matches_hof_residual_core(spark):
-    """_seedk_rank_scan (assign/probe/residuals) must equal the HOF
-    broadcast-ranking _residual_core it replaced, row-for-row."""
-    from kasper_spark.operators.similarity import (
-        _IVF_NPROBE,
-        _residual_core,
-        _residual_core_hof,
-    )
-
-    new = _residual_core(spark, SF_ORACLE)
-    old = _residual_core_hof(spark, SF_ORACLE)
-    assert sorted(map(tuple, new["assign"].collect())) == sorted(
-        map(tuple, old["assign"].collect())
-    )
-    assert sorted(map(tuple, new["probe"].collect())) == sorted(
-        map(tuple, old["probe"].collect())
-    )
-    got_res = {r["vec_id"]: (r["cid"], tuple(r["rvec"])) for r in new["res"].collect()}
-    want_res = {r["vec_id"]: (r["cid"], tuple(r["rvec"])) for r in old["res"].collect()}
-    assert got_res == want_res
-
-
 def test_pqres_encode_np_matches_hof(spark):
     """_pqres_encode_np must equal the interpreted _pqres_encode over the
     full residual corpus."""
@@ -176,21 +154,11 @@ def test_pqres_encode_np_matches_hof(spark):
         _pqres_codebook,
         _pqres_encode,
         _pqres_encode_np,
-        _residual_core,
+        _residuals,
     )
 
-    core = _residual_core(spark, SF_ORACLE)
-    cb = _pqres_codebook(core["res"])
-    got = sorted(map(tuple, _pqres_encode_np(core["res"], cb).collect()))
-    want = sorted(map(tuple, _pqres_encode(core["res"], cb).collect()))
-    assert got == want
-
-
-def test_md5_sigs_python_matches_jvm(spark):
-    """The Python-pass MinHash signatures must equal the 32-wide JVM
-    md5/conv aggregate row-for-row over the whole corpus."""
-    from kasper_spark.operators.dedup import _md5_sigs, _md5_sigs_hof
-
-    got = sorted(map(tuple, _md5_sigs(spark, SF_ORACLE).collect()))
-    want = sorted(map(tuple, _md5_sigs_hof(spark, SF_ORACLE).collect()))
+    res = _residuals(spark, SF_ORACLE)
+    cb = _pqres_codebook(res)
+    got = sorted(map(tuple, _pqres_encode_np(res, cb).collect()))
+    want = sorted(map(tuple, _pqres_encode(res, cb).collect()))
     assert got == want

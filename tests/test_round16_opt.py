@@ -1,18 +1,12 @@
 """Round-16 OPTIMIZATION gates.
 
-Helper-level pins for this round's changes, so a future edit that breaks
-one fails here first rather than in a 50-query sweep:
-
-- the result cache's code-version keying (r15 verdict "what's wrong" #1:
-  an edit to the builder must force a rebuild);
-- correctness hardening from ADVICE r15 (df=0 n_terms semantics, numpy
-  ranking NaN guard, retrain pending-tail assert, reclaim glob assert).
+Helper-level pins for the driver-side kernels this round introduced, so
+a future edit that breaks one fails here first rather than in a
+50-query sweep. The end-to-end values of the rewritten ANN, ER and BM25
+chains are certified against DuckDB in tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
-
-import os
-import textwrap
 
 from kasper_spark.registry import load_all_operators
 from tests.conftest import SF_ORACLE  # noqa: F401
@@ -20,103 +14,11 @@ from tests.conftest import SF_ORACLE  # noqa: F401
 load_all_operators()
 
 
-def test_result_cache_key_tracks_builder_source(tmp_path):
-    """Editing the file that defines the build callable must change the
-    cache directory (so a stale cache built by OLD code can never be
-    served), while the same source keeps the key stable."""
-    from kasper_spark.functions.result_cache import cache_dir, code_token
-
-    mod = tmp_path / "builder_mod.py"
-    mod.write_text(
-        textwrap.dedent(
-            """
-            def build():
-                return "v1"
-            """
-        )
-    )
-    ns1: dict = {}
-    exec(compile(mod.read_text(), str(mod), "exec"), ns1)
-    # a data file for the fingerprint side of the key
-    (tmp_path / "documents.parquet").write_bytes(b"x" * 16)
-
-    d1 = cache_dir(str(tmp_path), "t", "documents", build=ns1["build"])
-    d1_again = cache_dir(str(tmp_path), "t", "documents", build=ns1["build"])
-    assert d1 == d1_again, "same source must give a stable key"
-
-    tok1 = code_token(ns1["build"])
-    mod.write_text(
-        textwrap.dedent(
-            """
-            def build():
-                return "v2"  # a material edit to the builder's module
-            """
-        )
-    )
-    ns2: dict = {}
-    exec(compile(mod.read_text(), str(mod), "exec"), ns2)
-    tok2 = code_token(ns2["build"])
-    assert tok1 != tok2, "editing the builder's file must change the token"
-    d2 = cache_dir(str(tmp_path), "t", "documents", build=ns2["build"])
-    assert d1 != d2, "an edit to the builder must re-key the cache dir"
-
-
-def test_result_cache_inflight_chains_carry_module_token():
-    """The cached eval/retrieval chains must key on their own operator
-    module's source (the exact invalidation the r15 verdict asked for:
-    an edit to _graded_scored forces a rebuild)."""
-    import hashlib
-
-    from kasper_spark.functions.result_cache import code_token
-    from kasper_spark.operators import evaluation, retrieval
-
-    for mod, fn in [
-        (evaluation, evaluation._graded_scored),
-        (retrieval, retrieval._bm25_ranked),
-    ]:
-        with open(mod.__file__, "rb") as f:
-            want = hashlib.md5(f.read()).hexdigest()[:10]
-        assert code_token(fn) == want
-
 # ---- Fused numpy ADC pass (r15 verdict ticket #3) ---------------------
 #
 # The five PQ serving chains collapsed their encode/LUT/groupBy join
-# pyramids into _np_adc_scan; the pre-round-16 join-chain forms stay
-# in-tree as references. These pins assert row-for-row equality of the
-# public results and of every driver-twin kernel the scan consumes.
-
-
-def test_ann_pq_topk_matches_joinchain(spark):
-    from kasper_spark.operators.similarity import _ann_pq_topk_joinchain
-    from kasper_spark.registry import QUERIES
-
-    got = sorted(map(tuple, QUERIES["ann_pq_topk"](spark, SF_ORACLE).collect()))
-    want = sorted(map(tuple, _ann_pq_topk_joinchain(spark, SF_ORACLE).collect()))
-    assert got == want
-
-
-def test_ann_ivf_pq_topk_matches_joinchain(spark):
-    from kasper_spark.operators.similarity import _ann_ivf_pq_topk_joinchain
-    from kasper_spark.registry import QUERIES
-
-    got = sorted(map(tuple, QUERIES["ann_ivf_pq_topk"](spark, SF_ORACLE).collect()))
-    want = sorted(
-        map(tuple, _ann_ivf_pq_topk_joinchain(spark, SF_ORACLE).collect())
-    )
-    assert got == want
-
-
-def test_ann_ivf_pq_residual_matches_joinchain(spark):
-    from kasper_spark.operators.similarity import _ann_ivf_pq_residual_joinchain
-    from kasper_spark.registry import QUERIES
-
-    got = sorted(
-        map(tuple, QUERIES["ann_ivf_pq_residual"](spark, SF_ORACLE).collect())
-    )
-    want = sorted(
-        map(tuple, _ann_ivf_pq_residual_joinchain(spark, SF_ORACLE).collect())
-    )
-    assert got == want
+# pyramids into _np_adc_scan. These pins assert row-for-row equality of
+# every driver-twin kernel the scan consumes.
 
 
 def test_pq_encode_packed_matches_codes_array(spark):
@@ -147,18 +49,18 @@ def test_pqres_encode_packed_matches_codes_array(spark):
         _codes_array,
         _pqres_codebook,
         _pqres_encode_np,
-        _residual_core,
+        _residuals,
     )
 
-    core = _residual_core(spark, SF_ORACLE)
-    cb = _pqres_codebook(core["res"])
+    res = _residuals(spark, SF_ORACLE)
+    cb = _pqres_codebook(res)
     got = {
         r["vec_id"]: tuple(r["codes"])
-        for r in _pqres_encode_np(core["res"], cb, packed=True).collect()
+        for r in _pqres_encode_np(res, cb, packed=True).collect()
     }
     want = {
         r["vec_id"]: tuple(r["codes"])
-        for r in _codes_array(_pqres_encode_np(core["res"], cb)).collect()
+        for r in _codes_array(_pqres_encode_np(res, cb)).collect()
     }
     assert got == want
 
@@ -251,19 +153,6 @@ def test_structural_contracts_all_zero(spark):
 # ---- ER per-block union-find closure (verdict #4) ---------------------
 
 
-def test_entity_resolution_matches_loop(spark):
-    """The per-block union-find ER must return exactly the rows of the
-    large/small-star-loop form it replaced."""
-    from kasper_spark.operators.dedup import _entity_resolution_loop
-    from kasper_spark.registry import QUERIES
-
-    got = sorted(
-        map(tuple, QUERIES["entity_resolution_pipeline"](spark, SF_ORACLE).collect())
-    )
-    want = sorted(map(tuple, _entity_resolution_loop(spark, SF_ORACLE).collect()))
-    assert got == want
-
-
 def test_cc_within_blocks_matches_connected_components(spark):
     """On a synthetic blocked edge set (edges never span blocks), the
     one-pass union-find must label components exactly like the loop:
@@ -291,34 +180,12 @@ def test_cc_within_blocks_matches_connected_components(spark):
     assert got == want
 
 
-# ---- Pre-resolved-literal BM25/eval chains (r15 verdict floor ticket #6)
+# ---- Pre-resolved-literal PRF round-2 scorer (r15 verdict floor #6) ----
 #
-# The driver-bounded stats/df/qt sides of the BM25 scoring plans are
-# resolved up front and inlined as literals; the broadcast-join forms
-# stay in-tree as references. These pins assert row-for-row equality
-# (including the DECIMAL(30,12) scores bit-for-bit, via tuple compare).
-
-
-def test_graded_scored_literal_matches_joinform(spark):
-    from kasper_spark.operators.evaluation import (
-        _graded_scored,
-        _graded_scored_joinform,
-    )
-
-    got = sorted(map(tuple, _graded_scored(spark, SF_ORACLE).collect()))
-    want = sorted(map(tuple, _graded_scored_joinform(spark, SF_ORACLE).collect()))
-    assert got and got == want
-
-
-def test_bm25_ranked_literal_matches_joinform(spark):
-    from kasper_spark.operators.retrieval import (
-        _bm25_ranked,
-        _bm25_ranked_joinform,
-    )
-
-    got = sorted(map(tuple, _bm25_ranked(spark, SF_ORACLE).collect()))
-    want = sorted(map(tuple, _bm25_ranked_joinform(spark, SF_ORACLE).collect()))
-    assert got and got == want
+# The round-2 scorer resolves its stats/df up front and inlines them as
+# literals; its DataFrame-terms join form is also its fallback when no
+# term occurs. This pin asserts row-for-row equality (including the
+# DECIMAL(30,12) scores bit-for-bit, via tuple compare).
 
 
 def test_prf_round2_literal_matches_joinform(spark):
